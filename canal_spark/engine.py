@@ -29,21 +29,29 @@ reference's "only complete transactions are delivered").
 from __future__ import annotations
 
 import datetime as _dt
+import logging
 import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from canal_spark.operators import filters
 from canal_spark.operators.lww import lww_collapse
 from canal_spark.operators.merge import merge_epoch
 from canal_spark.operators.txn import committed_watermarks, tx_barrier
-from canal_spark.plans.epoch import partition_extents, plan_epoch, read_slice
+from canal_spark.plans.epoch import (
+    changelog_schema,
+    partition_extents,
+    plan_epoch,
+    read_slice,
+)
 from canal_spark.plans.table import SnapshotTable
 
 PAYLOAD_COLS = ("op", "tokens", "n_tok", "source")
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -173,12 +181,19 @@ class CdcEngine:
                 "capture_changes=False and no sinks"
             )
         self._extents: dict[int, int] | None = None
+        #: the changelog's schema, learned together with the extents:
+        #: every slice is planned from it instead of re-inferring it
+        #: from parquet footers (one Spark job per slice otherwise)
+        self._log_schema = None
 
     # ------------------------------------------------------------ plan
     @property
     def extents(self) -> dict[int, int]:
         if self._extents is None:
-            self._extents = partition_extents(self.spark, self.changelog_path)
+            self._log_schema = changelog_schema(self.spark, self.changelog_path)
+            self._extents = partition_extents(
+                self.spark, self.changelog_path, self._log_schema
+            )
         return self._extents
 
     def budget_for_epochs(self, n_epochs: int) -> int:
@@ -194,7 +209,7 @@ class CdcEngine:
         return max(1, (max(remaining) + n_epochs - 1) // n_epochs)
 
     def _slice(self, bounds: dict[int, tuple[int, int]]):
-        df = read_slice(self.spark, self.changelog_path, bounds)
+        df = read_slice(self.spark, self.changelog_path, bounds, self._log_schema)
         if self.source_whitelist:
             df = filters.whitelist(df, self.source_whitelist)
         if self.source_blacklist:
@@ -255,6 +270,17 @@ class CdcEngine:
             # a tx larger than the budget: grow the slice (deterministic)
             budget *= 2
             bounds = {p: (f, min(f + budget, extents[p])) for p, (f, _) in bounds.items()}
+            # in partial mode a missing clean cut can grow the slice up
+            # to the whole remaining log (and the barrier's per-tx
+            # collect with it), so make the escalation visible there
+            log.log(
+                logging.WARNING if self.partial_updates else logging.DEBUG,
+                "epoch %d: no committed progress in the slice; lsn budget "
+                "doubled to %d over %d partitions",
+                epoch,
+                budget,
+                len(bounds),
+            )
 
         if not any(wms[p] > floors[p] for p in bounds):
             # only a trailing incomplete tx remains anywhere -> done

@@ -58,7 +58,12 @@ from canal_spark.operators import filters
 from canal_spark.operators.lww import _packed_order, lww_collapse
 from canal_spark.operators.merge import append_epoch, merge_epoch
 from canal_spark.operators.txn import committed_watermarks, tx_barrier
-from canal_spark.plans.epoch import partition_extents, plan_epoch, read_slice
+from canal_spark.plans.epoch import (
+    changelog_schema,
+    partition_extents,
+    plan_epoch,
+    read_slice,
+)
 from canal_spark.plans.table import SnapshotTable, bucket_expr
 
 PAYLOAD_COLS = ("op", "tokens", "n_tok", "source")
@@ -182,11 +187,16 @@ class MultiTableEngine:
         self.ddl_events_path = ddl_events_path
         self._ddl_cache: list[dict] | None = None
         self._extents: dict[int, int] | None = None
+        #: learned together with the extents (see changelog_schema)
+        self._log_schema = None
 
     @property
     def extents(self) -> dict[int, int]:
         if self._extents is None:
-            self._extents = partition_extents(self.spark, self.changelog_path)
+            self._log_schema = changelog_schema(self.spark, self.changelog_path)
+            self._extents = partition_extents(
+                self.spark, self.changelog_path, self._log_schema
+            )
         return self._extents
 
     # ------------------------------------------------------------ plan
@@ -237,7 +247,7 @@ class MultiTableEngine:
         floors = {p: f for p, (f, _) in bounds.items()}
         budget = self.lsn_budget
         while True:
-            sl = read_slice(self.spark, self.changelog_path, bounds)
+            sl = read_slice(self.spark, self.changelog_path, bounds, self._log_schema)
             wms = committed_watermarks(sl, floors)
             progressed = any(wms[p] > floors[p] for p in bounds)
             at_extent = all(t >= ext[p] for p, (_, t) in bounds.items())
@@ -280,7 +290,7 @@ class MultiTableEngine:
                 for p in wms
                 if wms[p] > ckpts.get(p, -1)
             }
-            sl = read_slice(self.spark, self.changelog_path, bounds)
+            sl = read_slice(self.spark, self.changelog_path, bounds, self._log_schema)
         else:
             planned = self._plan_slice(
                 ckpts,

@@ -89,12 +89,11 @@ def lww_collapse(
     if broadcast_winners:
         winners = F.broadcast(winners)
     # join keyed on `key` ALONE (winner match = post-filter on the
-    # packed order): the broadcast hash relation is keyed identically
-    # to the MERGE's anti/semi key joins, so when the engine passes the
-    # same cached winners frame everywhere, ReuseExchange builds the
-    # broadcast ONCE per write job instead of once per join. Each event
-    # row matches exactly one winner row (winners are unique per key),
-    # so the join does not expand.
+    # packed order), the same key as the MERGE's anti/semi joins over
+    # the engine's cached winners frame. The executed write job still
+    # builds one BroadcastExchange per join (three per CoW epoch, no
+    # ReusedExchange). Each event row matches exactly one winner row
+    # (winners are unique per key), so the join does not expand.
     out = (
         df.withColumn("_ord_ev", ord_col)
         .join(winners, [key])

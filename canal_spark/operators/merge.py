@@ -206,10 +206,12 @@ def merge_epoch(
         keys_df = delta.select("bucket", key)
         affected_src = keys_df.select("bucket")
     else:
-        # pass the key frame through VERBATIM as the join side: it is
-        # the same (cached) winners subtree the LWW winner join
-        # broadcasts, keyed on `key` alone — ReuseExchange then builds
-        # ONE broadcast per write job for all three joins
+        # pass the key frame through VERBATIM as the join side: the
+        # same (cached) winners frame the LWW winner join broadcasts,
+        # keyed on `key` alone. The executed plan does NOT share one
+        # broadcast between them: the anti, semi and winner joins each
+        # build their own BroadcastExchange over the cached winners
+        # (no ReusedExchange; three small cache-scan jobs per epoch)
         keys_df = key_frame
         affected_src = key_frame.select(bucket_expr(key, n_buckets).alias("bucket"))
     # driver-side metadata, bounded by n_buckets — never by data size;
@@ -228,9 +230,8 @@ def merge_epoch(
 
     # keyed on `key` ALONE when a key frame is passed: `old` is already
     # pruned to the affected buckets and bucket = f(key), so key
-    # equality implies bucket equality. The frame is joined VERBATIM
-    # (no projection) so its broadcast subtree stays byte-identical to
-    # the LWW winner join's and is built once (ReuseExchange).
+    # equality implies bucket equality. Each of these joins broadcasts
+    # the frame separately (see above).
     join_on = [key] if key_frame is not None else ["bucket", key]
     untouched = old.join(delta_keys, join_on, "left_anti")
     contested = old.join(delta_keys, join_on, "left_semi")

@@ -42,7 +42,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from canal_spark.operators import filters
-from canal_spark.plans.epoch import partition_extents, plan_epoch, read_slice
+from canal_spark.plans.epoch import (
+    changelog_schema,
+    partition_extents,
+    plan_epoch,
+    read_slice,
+)
 
 _CURSOR_RE = re.compile(r"cursor-([A-Za-z0-9_\-\.]+)\.json$")
 
@@ -134,12 +139,17 @@ class ChangelogConsumer:
         self.source_blacklist = source_blacklist
         self.op_types = op_types
         self._extents: dict[int, int] | None = None
+        #: learned together with the extents (see changelog_schema)
+        self._log_schema = None
         self._outstanding: tuple[int, dict[int, tuple[int, int]]] | None = None
 
     @property
     def extents(self) -> dict[int, int]:
         if self._extents is None:
-            self._extents = partition_extents(self.spark, self.changelog_path)
+            self._log_schema = changelog_schema(self.spark, self.changelog_path)
+            self._extents = partition_extents(
+                self.spark, self.changelog_path, self._log_schema
+            )
         return self._extents
 
     def positions(self) -> dict[int, int]:
@@ -156,7 +166,7 @@ class ChangelogConsumer:
         bounds = plan_epoch(state["positions"], self.extents, self.lsn_budget)
         if bounds is None:
             return None
-        df = read_slice(self.spark, self.changelog_path, bounds)
+        df = read_slice(self.spark, self.changelog_path, bounds, self._log_schema)
         if self.source_whitelist:
             df = filters.whitelist(df, self.source_whitelist)
         if self.source_blacklist:

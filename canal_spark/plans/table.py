@@ -74,6 +74,11 @@ DEFAULT_SCHEMA = [
 ]
 
 
+def _q(name: str) -> str:
+    """`name` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def bucket_expr(key_col: str, n_buckets: int):
     """Engine-internal key→bucket routing (canal's pk-hash partition
     routing [C: connector/core/.../MQMessageUtils.java :: #messagePartition])."""
@@ -295,6 +300,14 @@ class SnapshotTable:
         internal=True (the MERGE path) exposes `_seq`/`_tombstone` and
         keeps tombstone rows.
 
+        Planning reads the manifest, never the files: each group of
+        files written under one schema version is read with that
+        version's schema as recorded in the snapshot (plus `_seq`,
+        `_tombstone` and the `bucket` partition column, see
+        _file_ddl), so building the frame starts no footer-inference
+        Spark job; only a point lookup's bucket derivation (see
+        `key_range` above) runs one.
+
         Merge-on-read resolution: file entries written by append_epoch
         carry `frag: true` in the manifest; a bucket containing any
         fragment entry holds deltas on top of its base, and only files
@@ -356,9 +369,14 @@ class SnapshotTable:
                 )
 
         def _union(groups: dict[int, list[str]], wb: bool, internal_: bool):
+            # the schema comes from the manifest, never from the files:
+            # an unschema'd parquet read starts a footer-inference Spark
+            # job per call, the dominant fixed cost of a short read
             parts = [
                 self._normalize(
-                    spark.read.option("basePath", self.data_dir).parquet(*paths),
+                    spark.read.schema(self._file_ddl(snap, ver))
+                    .option("basePath", self.data_dir)
+                    .parquet(*paths),
                     snap,
                     ver,
                     wb,
@@ -493,28 +511,46 @@ class SnapshotTable:
             sizes[r] = sizes.get(r, 0) + 1
         return [sizes[find(i)] > 1 for i in range(n)]
 
+    @staticmethod
+    def _file_ddl(snap: dict, file_ver: int) -> str:
+        """Read schema (DDL) of the data files written under schema
+        version `file_ver`: that version's fields plus the merge
+        metadata and the `bucket` partition column. Every writer
+        (write_bucketed, via align_to_schema or a normalized read)
+        stores exactly these column types, so the reader needs no
+        footer inference. The `epoch=` path segment is still
+        discovered from the paths; _normalize projects it away."""
+        return ", ".join(
+            [f"{_q(f['name'])} {f['type']}" for f in snap["schemas"][str(file_ver)]]
+            + ["`_seq` bigint", "`_tombstone` boolean", "`bucket` int"]
+        )
+
     def _normalize(
         self, df: DataFrame, snap: dict, file_ver: int, with_bucket: bool, internal: bool
     ) -> DataFrame:
         """Map a file's physical schema (version it was written under) to
         the table's current schema by FIELD ID: rename + widen are just
-        alias/cast; added columns materialize as typed NULLs."""
+        alias/cast; added columns materialize as typed NULLs.
+
+        The projection is built as SQL expression strings: one
+        `selectExpr` call instead of several Py4J round trips per
+        Column (`col`, `cast`, `alias`), which made up about half of
+        a short read's planning time and most of its jitter."""
         current = snap["schemas"][str(snap["schema_ver"])]
         old = {f["id"]: f for f in snap["schemas"][str(file_ver)]}
         cols = []
         for fld in current:
             o = old.get(fld["id"])
-            if o is None:
-                cols.append(F.lit(None).cast(fld["type"]).alias(fld["name"]))
-            else:
-                cols.append(F.col(o["name"]).cast(fld["type"]).alias(fld["name"]))
+            src = "NULL" if o is None else _q(o["name"])
+            cols.append(f"CAST({src} AS {fld['type']}) AS {_q(fld['name'])}")
         if internal:
-            cols += [F.col("_seq").cast("long"), F.col("_tombstone").cast("boolean")]
+            cols += ["CAST(`_seq` AS bigint) AS `_seq`",
+                     "CAST(`_tombstone` AS boolean) AS `_tombstone`"]
         else:
-            df = df.filter(~F.col("_tombstone"))
+            df = df.filter("NOT `_tombstone`")
         if with_bucket:
-            cols.append(F.col("bucket").cast("int").alias("bucket"))
-        return df.select(*cols)
+            cols.append("CAST(`bucket` AS int) AS `bucket`")
+        return df.selectExpr(*cols)
 
     def _empty(
         self, spark: SparkSession, schema_fields: list[dict], with_bucket: bool, internal: bool
@@ -793,16 +829,28 @@ class SnapshotTable:
         (insert→delete, repeated updates) collapse to the net effect;
         a key that is tombstoned in both snapshots is no change.
 
-        Scale shape: one full-outer join of the two snapshots keyed on
-        the key column — both sides pruned to the BUCKETS WHOSE
-        MANIFEST FILE LISTS DIFFER between the snapshots (a bucket's
-        visible state is a pure function of its file list, so an
-        identical list means zero changes: those buckets are never
-        opened, let alone joined). Within the differing buckets,
-        payload columns ride only on the new side. Cost is O(touched
-        buckets), the floor for snapshot differencing without a change
-        index; an epoch that touched 1% of the buckets diffs 1% of the
-        table.
+        Scale shape: planned from the two manifests alone (schemas
+        included — no footer inference, so building the frame starts
+        no Spark job). Only the BUCKETS WHOSE MANIFEST FILE LISTS
+        DIFFER between the snapshots are read (a bucket's visible
+        state is a pure function of its file list, so an identical
+        list means zero changes: those buckets are never opened). When
+        both snapshots have the same bucket count, a key lives in the
+        same bucket at both ends, and the differing buckets split into
+        three classes:
+        - held only by the to-snapshot: a join-free scan of its
+          visible rows, emitted as INSERT (`before_*` NULL) — e.g.
+          every bucket of `read_changes(0, e)`, a consumer
+          bootstrapping from the empty table;
+        - held only by the from-snapshot: its visible rows as DELETE;
+        - held by both: one full-outer join on the key column, with
+          payload columns riding only on the new side; no join runs
+          when there is no such bucket.
+        A rebucket inside the range (bucket counts differ) moves keys
+        between buckets, so then every differing bucket goes through
+        the one join. Cost is O(touched buckets), the floor for
+        snapshot differencing without a change index; an epoch that
+        touched 1% of the buckets diffs 1% of the table.
 
         `to_epoch` is resolved ONCE (both sides and the schema come
         from the same snapshot), so a concurrent commit cannot mix
@@ -815,11 +863,11 @@ class SnapshotTable:
         RETRACT the superseded contribution without holding its own
         per-key state (e.g. incremental aggregate maintenance,
         operators/mv.py). Old-side payload columns ride the SAME
-        full-outer join — no extra shuffle, just wider old-side rows
-        over the already-pruned differing buckets. Before-images are
-        projected through the `to_epoch` schema on BOTH sides
-        (_normalize maps by field id), so columns added between the two
-        epochs read as NULL before-values.
+        full-outer join (or the from-only scan) — no extra shuffle,
+        just wider old-side rows over the already-pruned differing
+        buckets. Before-images are projected through the `to_epoch`
+        schema on BOTH sides (_normalize maps by field id), so columns
+        added between the two epochs read as NULL before-values.
 
         `source`: "auto" (default) serves the feed from WRITE-TIME
         CAPTURE files (Delta's change-data-files analog — see
@@ -878,20 +926,80 @@ class SnapshotTable:
             f["name"]: f["type"]
             for f in snap_b["schemas"][str(snap_b["schema_ver"])]
         }
-        before_cols = (
-            [
-                (
-                    F.col(c).cast(b_types[c])
-                    if c in a_fields
-                    else F.lit(None).cast(b_types[c])
-                ).alias(f"_before_{c}")
-                for c in cols
-            ]
-            if with_before
-            else []
-        )
+        before = cols if with_before else []
+
+        def _null(c: str):
+            return F.lit(None).cast(b_types[c])
+
+        def _old(c: str):
+            return F.col(c).cast(b_types[c]) if c in a_fields else _null(c)
+
+        # bucket classes (see Scale shape): a one-sided bucket can pair
+        # with nothing on the other side only if no rebucket inside the
+        # range moved keys between buckets
+        if snap_a["n_buckets"] == snap_b["n_buckets"]:
+            to_only = [bk for bk in diff_buckets if str(bk) not in snap_a["files"]]
+            from_only = [bk for bk in diff_buckets if str(bk) not in snap_b["files"]]
+        else:
+            to_only, from_only = [], []
+        one_sided = set(to_only) | set(from_only)
+        shared = [bk for bk in diff_buckets if bk not in one_sided]
+
+        def _visible(snap: dict, buckets: list[int]) -> DataFrame:
+            return self.read(
+                spark, epoch=snap["epoch"], buckets=buckets,
+                with_bucket=False, internal=True,
+            ).filter(F.col("_seq").isNotNull() & ~F.col("_tombstone"))
+
+        parts = []
+        if to_only:
+            parts.append(
+                _visible(snap_b, to_only).select(
+                    key,
+                    F.lit("INSERT").alias("op"),
+                    *cols,
+                    *[_null(c).alias(f"before_{c}") for c in before],
+                    "_seq",
+                )
+            )
+        if from_only:
+            parts.append(
+                _visible(snap_a, from_only).select(
+                    key,
+                    F.lit("DELETE").alias("op"),
+                    *[_null(c).alias(c) for c in cols],
+                    *[_old(c).alias(f"before_{c}") for c in before],
+                    "_seq",
+                )
+            )
+        if shared or not parts:
+            parts.append(
+                self._diff_join(
+                    spark, snap_a, snap_b, shared, key, cols,
+                    [_old(c).alias(f"_before_{c}") for c in before],
+                )
+            )
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def _diff_join(
+        self,
+        spark: SparkSession,
+        snap_a: dict,
+        snap_b: dict,
+        buckets: list[int],
+        key: str,
+        cols: list[str],
+        before_cols: list,
+    ) -> DataFrame:
+        """The snapshot diff of `buckets` as one full-outer join on the
+        key, op from per-side visibility and `_seq` — read_changes'
+        path for the buckets both snapshots hold, and for every
+        differing bucket across a rebucket."""
         a = self.read(
-            spark, epoch=snap_a["epoch"], buckets=diff_buckets,
+            spark, epoch=snap_a["epoch"], buckets=buckets,
             with_bucket=False, internal=True,
         ).select(
             key,
@@ -900,7 +1008,7 @@ class SnapshotTable:
             F.col("_tombstone").alias("_tomb_a"),
         )
         b = self.read(
-            spark, epoch=snap_b["epoch"], buckets=diff_buckets,
+            spark, epoch=snap_b["epoch"], buckets=buckets,
             with_bucket=False, internal=True,
         ).select(
             key, *cols, F.col("_seq").alias("_seq_b"), F.col("_tombstone").alias("_tomb_b")
@@ -927,7 +1035,7 @@ class SnapshotTable:
                     F.when(F.col("op") != "INSERT", F.col(f"_before_{c}")).alias(
                         f"before_{c}"
                     )
-                    for c in (cols if with_before else [])
+                    for c in (cols if before_cols else [])
                 ],
                 F.coalesce(F.col("_seq_b"), F.col("_seq_a")).alias("_seq"),
             )

@@ -178,3 +178,16 @@ def test_streaming_capture_parity(spark, changelog_dir, oracle_state, tmp_path):
     assert su.apply_batch(spark.read.parquet(changelog_dir), batch_id=0) is False
     assert table.current_epoch() == final
     assert len(os.listdir(os.path.join(table.root, "changes"))) == n_dirs
+
+
+def test_capture_annotations_resolve():
+    """The capture entry points' `DataFrame` annotations resolve at run
+    time (typing.get_type_hints), not only as postponed strings."""
+    import typing
+
+    from pyspark.sql import DataFrame
+
+    from canal_spark.engine import capture_epoch_changes
+
+    assert typing.get_type_hints(capture_epoch_changes)["delta"] is DataFrame
+    assert typing.get_type_hints(CdcEngine._capture_changes)["delta"] is DataFrame

@@ -23,6 +23,22 @@ def duck():
     return con
 
 
+@pytest.fixture(scope="module")
+def oracle_result(duck):
+    """Oracle result by SQL text, computed once per module: several
+    queries share one oracle (e.g. the three dedup_incremental variants,
+    whose recursive-CTE oracle is the slowest statement in the suite),
+    and an oracle is a pure function of the fixed sf0.001 tables."""
+    cache: dict[str, pd.DataFrame] = {}
+
+    def run(sql: str) -> pd.DataFrame:
+        if sql not in cache:
+            cache[sql] = duck.execute(sql).df()
+        return cache[sql].copy()
+
+    return run
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1).copy()
     for c in df.columns:
@@ -43,9 +59,9 @@ ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
 
 
 @pytest.mark.parametrize("name", ORACLE_CHECKED)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, oracle_result, name):
     got = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    exp = duck.execute(entrymod.oracle_sql()[name]).df()
+    exp = oracle_result(entrymod.oracle_sql()[name])
     assert sorted(got.columns) == sorted(exp.columns)
     assert len(got) == len(exp)
     g, e = canon(got), canon(exp)

@@ -41,7 +41,7 @@ def partial_log(tmp_path_factory):
     return d
 
 
-def test_partial_engine_watermark_skew_parity(spark, tmp_path):
+def test_partial_engine_watermark_skew_parity(spark, tmp_path, caplog):
     """ADVICE r5 (high) reproduction: a 2-partition log where p1's only
     write to a key sits inside a transaction committing past the lsn
     budget. Unbarriered per-partition watermarks let p0 race ahead in
@@ -89,7 +89,14 @@ def test_partial_engine_watermark_skew_parity(spark, tmp_path):
 
     t = SnapshotTable.create(str(tmp_path / "t"), n_buckets=4)
     eng = CdcEngine(spark, log, t, lsn_budget=12, partial_updates=True)
-    eng.run_to_completion()
+    with caplog.at_level("WARNING", logger="canal_spark.engine"):
+        eng.run_to_completion()
+    # the p1 transaction straddles the barrier: the slice must grow,
+    # and partial mode reports each doubling
+    assert any(
+        r.levelname == "WARNING" and "lsn budget doubled" in r.getMessage()
+        for r in caplog.records
+    )
     got = _norm_rows(
         t.read(spark).select("doc_id", "tokens", "n_tok", "source").toPandas()
     )
