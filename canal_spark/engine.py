@@ -8,10 +8,15 @@ Pipeline per epoch e (SURVEY.md §3.1 mapped to Spark):
     -> whitelist/blacklist (optional)        # F1/F2 pre-filters
     -> committed_watermarks + tx_barrier     # TRANSACTIONEND buffering
     -> drop heartbeats, op filter            # F4/F5
-    -> lineage metrics                       # A4 (per-partition, collected)
-    -> lww_collapse                          # A1 (map-side partial agg)
-    -> merge_epoch                           # J2 (bucket-pruned CoW)
+    -> stage                                 # A4 lineage + cached LWW winners
+    -> StagedEpoch.write: lww_collapse       # A1 (map-side partial agg)
+       -> merge_epoch / append_epoch         # J2 (bucket-pruned CoW / MoR)
     -> table.commit(e, files, checkpoints, lineage)   # atomic; idempotent
+
+Everything from `stage` on is the epoch-write kernel every writer
+shares: CdcEngine, multi.apply_route (MultiTableEngine and
+StreamingMultiUpsert) and StreamingUpsert differ only in how they plan
+the slice and number and commit the epoch.
 
 Exactly-once: the commit is a single atomic manifest rename carrying
 data-file list + per-partition offsets + lineage; a re-run of a
@@ -32,13 +37,19 @@ import datetime as _dt
 import logging
 import os
 import time
-from dataclasses import dataclass
+from concurrent.futures import Future, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from canal_spark.operators import filters
-from canal_spark.operators.lww import lww_collapse
+from canal_spark.operators.lww import (
+    ORDER_COLS,
+    _packed_order,
+    lww_collapse,
+    lww_collapse_partial_delta,
+)
 from canal_spark.operators.merge import merge_epoch
 from canal_spark.operators.txn import committed_watermarks, tx_barrier
 from canal_spark.plans.epoch import (
@@ -47,7 +58,7 @@ from canal_spark.plans.epoch import (
     plan_epoch,
     read_slice,
 )
-from canal_spark.plans.table import SnapshotTable
+from canal_spark.plans.table import SnapshotTable, bucket_expr
 
 PAYLOAD_COLS = ("op", "tokens", "n_tok", "source")
 
@@ -69,12 +80,7 @@ class _Prepared:
     epoch: int
     wms: dict[int, int]
     ckpts_after: dict[int, int]
-    apply_df: object
-    winners: object
-    affected: list[int]
-    small: bool
-    lineage_thread: object
-    lineage_box: dict
+    staged: "StagedEpoch"
 
 
 class CdcEngine:
@@ -224,11 +230,11 @@ class CdcEngine:
         extents: dict[int, int] | None = None,
     ) -> "_Prepared | None":
         """Everything BEFORE the write job: plan bounds, find committed
-        watermarks, launch the lineage collect (background thread), and
-        materialize the cached winners. Reads only the immutable
-        changelog — never the table — so it is safe to run concurrently
-        with the previous epoch's write (pipelining, see
-        run_to_completion).
+        watermarks, and `stage` the epoch (lineage collect on a
+        background thread, cached winners, bucket counts). Reads only
+        the immutable changelog — never the table's data — so it is
+        safe to run concurrently with the previous epoch's write
+        (pipelining, see run_to_completion).
 
         `extents` overrides the true partition extents (the DDL bridge
         clamps a partition at the next pending DDL position so no event
@@ -292,75 +298,11 @@ class CdcEngine:
 
             complete = drop_rolled_back(complete)
         apply_df = filters.op_filter(complete)
-        # per-partition lineage metrics in one NARROW scan (no HLL: an
-        # approx_count_distinct over the key strings measurably
-        # dominated this pass; key cardinality now comes exact and free
-        # from the winners count below).
-        # (A grouping-sets fusion of this pass with the LWW winners agg
-        # was measured and REJECTED: Expand doubles the input rows into
-        # an 8-buffer aggregate — ~70% slower than the two narrow
-        # scans at 64M events/local[8].)
-        # The collect runs on a SEPARATE THREAD, concurrent with the
-        # winners/merge jobs: its scan fills executor idle time during
-        # the driver-serial windows (broadcast build, planning) instead
-        # of extending the critical path.
-        import threading
-
-        lineage_q = (
-            apply_df.groupBy("source_partition")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum((F.col("op") != "DELETE").cast("long")).alias("n_upserts"),
-                F.sum((F.col("op") == "DELETE").cast("long")).alias("n_deletes"),
-                F.coalesce(F.sum("n_tok"), F.lit(0)).alias("sum_n_tok"),
-                F.min("lsn").alias("min_lsn"),
-                F.max("lsn").alias("max_lsn"),
-                F.max("ts").alias("max_ts"),
-            )
-        )
-        box: dict = {}
-
-        def _collect_lineage() -> None:
-            try:
-                box["rows"] = lineage_q.collect()
-            except Exception as ex:  # noqa: BLE001 - re-raised on join
-                box["err"] = ex
-
-        th = threading.Thread(target=_collect_lineage, daemon=True)
-        th.start()
-
-        # winners computed ONCE, cached: one job materializes the cache
-        # and returns per-bucket counts — the exact key cardinality
-        # (broadcast decision) AND the affected-bucket set, so the merge
-        # does not need its own discovery job.
-        from canal_spark.operators.lww import _packed_order
-        from canal_spark.plans.table import bucket_expr
-
-        winners = (
-            apply_df.groupBy("doc_id")
-            .agg(F.max(_packed_order(("lsn", "source_partition"))).alias("_ord"))
-            .persist()
-        )
-        bucket_counts = (
-            winners.groupBy(
-                bucket_expr("doc_id", self.table.snapshot()["n_buckets"]).alias("bucket")
-            )
-            .count()
-            .collect()
-        )
-        n_keys = sum(int(r["count"]) for r in bucket_counts)
-        affected = sorted(int(r["bucket"]) for r in bucket_counts)
-        small = n_keys <= self.broadcast_threshold_rows
         return _Prepared(
             epoch=epoch,
             wms=wms,
             ckpts_after={**ckpts, **wms},
-            apply_df=apply_df,
-            winners=winners,
-            affected=affected,
-            small=small,
-            lineage_thread=th,
-            lineage_box=box,
+            staged=stage(self.table, apply_df, self.broadcast_threshold_rows),
         )
 
     def _partial_barrier_wms(
@@ -474,15 +416,10 @@ class CdcEngine:
 
     @staticmethod
     def _discard(prep: "_Prepared | None") -> None:
-        """Release a prepared epoch's resources without executing it
-        (failure paths): drop the cached winners and drain the lineage
-        collect thread so no Spark jobs/cached partitions leak."""
-        if prep is None:
-            return
-        try:
-            prep.winners.unpersist()
-        finally:
-            prep.lineage_thread.join()
+        """Release a prepared epoch without executing it (failure
+        paths), so no cached partitions or lineage threads leak."""
+        if prep is not None:
+            prep.staged.release()
 
     def _execute(self, prep: "_Prepared") -> EpochResult:
         """The write job + atomic commit for a prepared epoch.
@@ -496,95 +433,28 @@ class CdcEngine:
         so a sink consumer may see the same delta under two epoch keys;
         the wire contract already dedups on (source_partition, lsn)
         watermarks (bus redelivery no-op, tests/test_bus_source.py)."""
-        t0 = time.monotonic()
+        staged = prep.staged
         try:
-            if self.partial_updates:
-                from canal_spark.operators.lww import lww_collapse_partial_delta
-
-                # own per-key aggregate (needs per-column winner ords,
-                # not just the max prep.winners caches); the winners
-                # frame still serves the merge's anti/semi joins
-                delta = lww_collapse_partial_delta(
-                    prep.apply_df,
-                    key="doc_id",
-                    payload_cols=PAYLOAD_COLS[1:],  # data cols, sans op
-                    broadcast_winners=prep.small,
-                )
-            else:
-                delta = lww_collapse(
-                    prep.apply_df,
-                    key="doc_id",
-                    payload_cols=PAYLOAD_COLS,
-                    broadcast_winners=prep.small,
-                    with_seq=True,
-                    winners=prep.winners,
-                )
-            if self.write_mode == "mor":
-                from canal_spark.operators.merge import append_epoch
-
-                rewritten = append_epoch(
-                    self.spark, self.table, delta, prep.epoch, affected=prep.affected
-                )
-            else:
-                rewritten = merge_epoch(
-                    self.spark,
-                    self.table,
-                    delta,
-                    prep.epoch,
-                    broadcast_delta=prep.small,
-                    key_frame=prep.winners,
-                    affected=prep.affected,
-                    partial=self.partial_updates,
-                )
-            for sink in self.sinks:
-                sink.apply(self.spark, delta, prep.epoch)
-            changes_rel = (
-                self._capture_changes(delta, prep) if self.capture_changes else None
+            rewritten, changes_rel = staged.write(
+                self.spark,
+                prep.epoch,
+                mode="partial" if self.partial_updates else self.write_mode,
+                sinks=self.sinks,
+                capture=self.capture_changes,
             )
-        except BaseException:
-            self._discard(prep)
-            raise
-        prep.winners.unpersist()
-        prep.lineage_thread.join()
-        box = prep.lineage_box
-        if "err" in box:
-            raise box["err"]
-        lineage_rows = box["rows"]
-        epoch, wms = prep.epoch, prep.wms
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        lineage = [
-            {
-                "epoch": epoch,
-                "source_partition": int(r["source_partition"]),
-                "n_events": int(r["n_events"]),
-                "n_upserts": int(r["n_upserts"] or 0),
-                "n_deletes": int(r["n_deletes"] or 0),
-                "sum_n_tok": int(r["sum_n_tok"] or 0),
-                "min_lsn": int(r["min_lsn"]),
-                "max_lsn": int(r["max_lsn"]),
-                "max_ts": int(
-                    r["max_ts"].replace(tzinfo=_dt.timezone.utc).timestamp() * 1e6
-                ),
-                "wall_ms": wall_ms,
-            }
-            for r in lineage_rows
-        ]
-        n_events = sum(li["n_events"] for li in lineage)
+        finally:
+            staged.release()
+        lineage = staged.lineage(prep.epoch)
         committed = self.table.commit(
-            epoch,
+            prep.epoch,
             rewritten,
-            wms,
+            prep.wms,
             lineage,
             append=(self.write_mode == "mor"),
             changes=changes_rel,
         )
-        return EpochResult(epoch, committed, n_events, wms)
-
-    def _capture_changes(self, delta: DataFrame, prep: "_Prepared") -> str:
-        return capture_epoch_changes(
-            self.spark, self.table, delta, prep.epoch, prep.affected, small=prep.small
-        )
+        n_events = sum(li["n_events"] for li in lineage)
+        return EpochResult(prep.epoch, committed, n_events, prep.wms)
 
     # ------------------------------------------------------ ddl stream
     def _ddl_events(self) -> list[dict]:
@@ -972,12 +842,206 @@ def _check_widening(frm: str, to: str) -> None:
         raise ValueError(f"illegal type change {frm} -> {to} (widenings only)")
 
 
+# ------------------------------------------------------ epoch kernel
+@dataclass
+class StagedEpoch:
+    """One epoch's barrier-filtered events, staged for the write (see
+    `stage`). The epoch-write kernel shared by CdcEngine,
+    multi.apply_route and StreamingUpsert: each stages once, calls
+    `write` (again under a new epoch number when a concurrent commit
+    won one) and `lineage`, commits, and calls `release` on every
+    path, failures included."""
+
+    table: SnapshotTable
+    apply_df: DataFrame
+    key: str
+    winners: DataFrame
+    n_buckets: int
+    lineage_rows: Future
+    affected: list[int] = field(default_factory=list)
+    small: bool = True
+    write_started: float = 0.0
+
+    def _count_buckets(self) -> int:
+        """Per-bucket winner counts: the affected buckets, and (summed)
+        the epoch's exact distinct-key count."""
+        counts = (
+            self.winners.groupBy(bucket_expr(self.key, self.n_buckets).alias("bucket"))
+            .count()
+            .collect()
+        )
+        self.affected = sorted(int(r["bucket"]) for r in counts)
+        return sum(int(r["count"]) for r in counts)
+
+    def write(
+        self,
+        spark: SparkSession,
+        epoch: int,
+        mode: str = "cow",
+        sinks: tuple = (),
+        capture: bool = False,
+    ) -> tuple[dict[int, list[str]], str | None]:
+        """LWW -> merge (`cow`; `partial` for sparse row images) or
+        append (`mor`) -> sink fan-out -> change capture, as epoch
+        `epoch`. Returns the file map and the staged change dir (None
+        without `capture`); commits nothing. Sinks run BEFORE the
+        commit: at-least-once to sinks, exactly-once to the table (a
+        retried write re-delivers the delta under a new epoch number;
+        the RDB sink's LWW guard makes that a no-op, the MQ sink is a
+        redeliverable bus)."""
+        self.write_started = time.monotonic()
+        n_buckets = self.table.snapshot()["n_buckets"]
+        if n_buckets != self.n_buckets:
+            # a rebucket committed since staging (concurrent
+            # maintenance, the race the writers' commit retries
+            # absorb): the staged bucket ids do not address its layout
+            self.n_buckets = n_buckets
+            self._count_buckets()
+        if mode == "partial":
+            # own per-key aggregate (needs per-column winner ords, not
+            # just the max the winners frame caches); the winners frame
+            # still serves the merge's anti/semi joins
+            delta = lww_collapse_partial_delta(
+                self.apply_df,
+                key=self.key,
+                payload_cols=PAYLOAD_COLS[1:],  # data cols, sans op
+                broadcast_winners=self.small,
+            )
+        else:
+            delta = lww_collapse(
+                self.apply_df,
+                key=self.key,
+                payload_cols=PAYLOAD_COLS,
+                broadcast_winners=self.small,
+                with_seq=True,
+                winners=self.winners,
+            )
+        if mode == "mor":
+            # looked up at call time, where the benchmark tracer wraps it
+            from canal_spark.operators.merge import append_epoch
+
+            rewritten = append_epoch(
+                spark, self.table, delta, epoch, affected=self.affected
+            )
+        else:
+            rewritten = merge_epoch(
+                spark,
+                self.table,
+                delta,
+                epoch,
+                broadcast_delta=self.small,
+                key_frame=self.winners,
+                affected=self.affected,
+                partial=(mode == "partial"),
+            )
+        for sink in sinks:
+            sink.apply(spark, delta, epoch)
+        changes = (
+            capture_epoch_changes(
+                spark, self.table, delta, epoch, self.affected, small=self.small
+            )
+            if capture
+            else None
+        )
+        return rewritten, changes
+
+    def lineage(self, epoch: int) -> list[dict]:
+        """The epoch's per-source-partition lineage records (A4), one
+        shape for every writer; `wall_ms` runs from the last `write`."""
+        rows = self.lineage_rows.result()
+        wall_ms = int((time.monotonic() - self.write_started) * 1000)
+        return [
+            {
+                "epoch": epoch,
+                "source_partition": int(r["source_partition"]),
+                "n_events": int(r["n_events"]),
+                "n_upserts": int(r["n_upserts"] or 0),
+                "n_deletes": int(r["n_deletes"] or 0),
+                "sum_n_tok": int(r["sum_n_tok"] or 0),
+                "min_lsn": int(r["min_lsn"]),
+                "max_lsn": int(r["max_lsn"]),
+                "max_ts": int(
+                    r["max_ts"].replace(tzinfo=_dt.timezone.utc).timestamp() * 1e6
+                ),
+                "wall_ms": wall_ms,
+            }
+            for r in rows
+        ]
+
+    def release(self) -> None:
+        """Drop the cached winners and drain the lineage collect."""
+        try:
+            self.winners.unpersist()
+        finally:
+            wait([self.lineage_rows])
+
+
+def stage(
+    table: SnapshotTable,
+    apply_df: DataFrame,
+    broadcast_threshold_rows: int = 4_000_000,
+) -> StagedEpoch:
+    """Stage one epoch's barrier-filtered events `apply_df` for the
+    write: start the lineage collect, cache the LWW winners and
+    collect their per-bucket counts. Reads only `apply_df` and the
+    table's metadata, never its data, so CdcEngine runs it
+    concurrently with the previous epoch's write."""
+    # per-partition lineage metrics in one NARROW scan (no HLL: an
+    # approx_count_distinct over the key strings measurably dominated
+    # this pass; key cardinality comes exact and free from the winners
+    # count below).
+    # (A grouping-sets fusion of this pass with the LWW winners agg was
+    # measured and REJECTED: Expand doubles the input rows into an
+    # 8-buffer aggregate — ~70% slower than the two narrow scans at 64M
+    # events/local[8].)
+    # The collect runs on a SEPARATE THREAD, concurrent with the
+    # winners/merge jobs: its scan fills executor idle time during the
+    # driver-serial windows (broadcast build, planning) instead of
+    # extending the critical path.
+    lineage_q = apply_df.groupBy("source_partition").agg(
+        F.count("*").alias("n_events"),
+        F.sum((F.col("op") != "DELETE").cast("long")).alias("n_upserts"),
+        F.sum((F.col("op") == "DELETE").cast("long")).alias("n_deletes"),
+        F.coalesce(F.sum("n_tok"), F.lit(0)).alias("sum_n_tok"),
+        F.min("lsn").alias("min_lsn"),
+        F.max("lsn").alias("max_lsn"),
+        F.max("ts").alias("max_ts"),
+    )
+    pool = ThreadPoolExecutor(max_workers=1)
+    lineage_rows = pool.submit(lineage_q.collect)
+    pool.shutdown(wait=False)
+
+    # winners computed ONCE, cached: one job materializes the cache and
+    # returns per-bucket counts — the exact key cardinality (broadcast
+    # decision) AND the affected-bucket set, so the merge needs no
+    # discovery job of its own; the cached frame also serves the LWW
+    # winner join and the merge's anti/semi joins
+    snap = table.snapshot()
+    key = snap["key_col"]
+    staged = StagedEpoch(
+        table=table,
+        apply_df=apply_df,
+        key=key,
+        winners=apply_df.groupBy(key)
+        .agg(F.max(_packed_order(ORDER_COLS)).alias("_ord"))
+        .persist(),
+        n_buckets=snap["n_buckets"],
+        lineage_rows=lineage_rows,
+    )
+    try:
+        staged.small = staged._count_buckets() <= broadcast_threshold_rows
+    except BaseException:
+        staged.release()
+        raise
+    return staged
+
+
 def capture_epoch_changes(
     spark: SparkSession,
     table,
     delta: DataFrame,
     epoch: int,
-    affected: list[int] | None = None,
+    affected: list[int],
     small: bool = False,
 ) -> str:
     """Write epoch `epoch`'s net change set (write-time CDF capture,
@@ -1003,25 +1067,14 @@ def capture_epoch_changes(
     INSERT for start-visibility, and never emits it.
 
     The old-side read is bucket-pruned to the epoch's affected buckets
-    (derived from the delta's keys when not supplied — one tiny
-    distinct job) and semi-filtered to the delta's keys (broadcast when
+    and semi-filtered to the delta's keys (broadcast when
     `small`, the same cardinality gate as every other delta join).
     Staged under a unique dir; the commit records it, a lost commit
     race orphans it for remove_orphans."""
     import uuid as _uuid
 
-    from canal_spark.plans.table import bucket_expr
-
     key = "doc_id"
     payload = [c for c in delta.columns if c not in (key, "op", "_seq")]
-    if affected is None:
-        n_buckets = table.snapshot()["n_buckets"]
-        affected = sorted(
-            r[0]
-            for r in delta.select(
-                bucket_expr(key, n_buckets).alias("b")
-            ).distinct().collect()
-        )
     old = table.read(
         spark, buckets=affected, with_bucket=False, internal=True
     ).select(

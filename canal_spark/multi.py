@@ -36,11 +36,13 @@ exactly like canal's instance cursor). Each route then re-scans the
 slice with its own `source` regex pushed into the parquet scan and
 runs the standard LWW -> bucket-pruned MERGE into its own table; per
 route the cost is O(its events), and routes write to disjoint
-directories so the write jobs share nothing. The slice is deliberately
-NOT cached across routes: re-scanning a pruned parquet range was
-measured cheaper than building a columnar cache of wide token arrays
-(see engine._prepare), and the per-route filter prunes the re-scan
-further.
+directories so the write jobs share nothing. Each route goes through
+the same epoch-write kernel as CdcEngine and StreamingUpsert
+(engine.stage -> StagedEpoch.write -> commit). The slice is
+deliberately NOT cached across routes: re-scanning a pruned parquet
+range was measured cheaper than building a columnar cache of wide
+token arrays (see engine._prepare), and the per-route filter prunes the
+re-scan further.
 """
 
 from __future__ import annotations
@@ -52,11 +54,9 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
+from canal_spark.engine import stage
 from canal_spark.operators import filters
-from canal_spark.operators.lww import _packed_order, lww_collapse
-from canal_spark.operators.merge import append_epoch, merge_epoch
 from canal_spark.operators.txn import committed_watermarks, tx_barrier
 from canal_spark.plans.epoch import (
     changelog_schema,
@@ -64,9 +64,12 @@ from canal_spark.plans.epoch import (
     plan_epoch,
     read_slice,
 )
-from canal_spark.plans.table import SnapshotTable, bucket_expr
+from canal_spark.plans.table import SnapshotTable
 
-PAYLOAD_COLS = ("op", "tokens", "n_tok", "source")
+#: member applies per group epoch run on a thread pool this wide (2-4
+#: in flight fill the driver-serial windows without routes fighting for
+#: executors — guide §2.6)
+ROUTE_PARALLELISM = 4
 
 _MARKER_RE = re.compile(r"group-(\d{8})\.json$")
 
@@ -159,15 +162,8 @@ class MultiTableEngine:
         broadcast_threshold_rows: int = 4_000_000,
         write_mode: str = "cow",
         ddl_events_path: str | None = None,
-        route_parallelism: int = 4,
     ):
-        names = [r.name for r in routes]
-        if len(set(names)) != len(names):
-            raise ValueError(f"duplicate route names: {names}")
-        if not routes:
-            raise ValueError("at least one TableRoute is required")
-        if write_mode not in ("cow", "mor"):
-            raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
+        check_routes(routes, write_mode)
         self.spark = spark
         self.changelog_path = changelog_path
         self.routes = list(routes)
@@ -175,10 +171,6 @@ class MultiTableEngine:
         self.lsn_budget = lsn_budget
         self.broadcast_threshold_rows = broadcast_threshold_rows
         self.write_mode = write_mode
-        #: member applies per group epoch run on a thread pool this
-        #: wide (2-4 in flight fills the driver-serial windows without
-        #: routes fighting for executors — guide §2.6; 1 = serial)
-        self.route_parallelism = max(1, int(route_parallelism))
         #: A3 DDL side-stream replicated to EVERY route table (canal's
         #: instance parses one DDL stream and every subscribed adapter
         #: applies it [C: parse/.../ddl/DruidDdlParser.java +
@@ -198,10 +190,6 @@ class MultiTableEngine:
                 self.spark, self.changelog_path, self._log_schema
             )
         return self._extents
-
-    # ------------------------------------------------------------ plan
-    def _recorded_wms(self, g: int) -> dict[int, int] | None:
-        return recorded_group_wms(self.routes, g)
 
     # ------------------------------------------------------ ddl stream
     def _group_ddl_wm(self) -> tuple[int, int]:
@@ -274,7 +262,7 @@ class MultiTableEngine:
 
         g = (self.group.current_epoch() or 0) + 1
         ckpts = self.group.checkpoints()
-        recorded = self._recorded_wms(g)
+        recorded = recorded_group_wms(self.routes, g)
         rolled_forward = recorded is not None
         pending_ddls = self._pending_ddls()
         if (
@@ -318,7 +306,15 @@ class MultiTableEngine:
             if snap.get("meta", {}).get("group_epoch", -1) >= g:
                 # already applied by the crashed run — roll-forward skip
                 return route.name, snap["epoch"], 0
-            t_epoch, n = self._apply_route(route, route.filtered(apply_df), g, wms)
+            t_epoch, n = apply_route(
+                self.spark,
+                route,
+                route.filtered(apply_df),
+                g,
+                wms,
+                write_mode=self.write_mode,
+                broadcast_threshold_rows=self.broadcast_threshold_rows,
+            )
             return route.name, t_epoch, n
 
         # member applies run CONCURRENTLY (r6, guide §2.6): each route
@@ -337,7 +333,7 @@ class MultiTableEngine:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(
-                max_workers=min(len(self.routes), self.route_parallelism)
+                max_workers=min(len(self.routes), ROUTE_PARALLELISM)
             ) as pool:
                 results = list(pool.map(_one, self.routes))
         table_epochs = {name: te for name, te, _ in results}
@@ -379,22 +375,22 @@ class MultiTableEngine:
                     "different plans share this group log"
                 )
 
-    def _apply_route(self, route: TableRoute, routed, g: int, wms: dict[int, int]):
-        return apply_route(
-            self.spark,
-            route,
-            routed,
-            g,
-            wms,
-            write_mode=self.write_mode,
-            broadcast_threshold_rows=self.broadcast_threshold_rows,
-        )
-
     def run_to_completion(self, max_epochs: int = 10_000) -> int:
         for _ in range(max_epochs):
             if self.run_epoch() is None:
                 break
         return self.group.current_epoch() or 0
+
+
+def check_routes(routes: list[TableRoute], write_mode: str) -> None:
+    """Reject a route set or write mode no group engine can run."""
+    names = [r.name for r in routes]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate route names: {names}")
+    if not routes:
+        raise ValueError("at least one TableRoute is required")
+    if write_mode not in ("cow", "mor"):
+        raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
 
 
 def replicate_ddl_to_routes(routes: list[TableRoute], d: dict) -> dict[str, int]:
@@ -446,123 +442,33 @@ def apply_route(
     broadcast_threshold_rows: int = 4_000_000,
     meta_extra: dict | None = None,
 ):
-    """LWW -> merge -> commit for one route, carrying the group
-    membership in the table's own atomic commit. Shared by the batch
-    MultiTableEngine and the streaming front-end (StreamingMultiUpsert)
-    — the protocol is identical, only the slice source differs. Same
-    winner-cache strategy as CdcEngine._prepare: one aggregation job
-    yields the exact key cardinality (broadcast decision) AND the
-    affected buckets, and the cached frame is reused by the LWW winner
-    join and the merge's anti/semi joins (ReuseExchange)."""
-    import threading
-
-    snap = route.table.snapshot()
-    key = snap["key_col"]
-    winners = (
-        routed.groupBy(key)
-        .agg(F.max(_packed_order(("lsn", "source_partition"))).alias("_ord"))
-        .persist()
-    )
-    lineage_box: dict = {}
-    lineage_q = routed.groupBy("source_partition").agg(
-        F.count("*").alias("n_events"),
-        F.sum((F.col("op") != "DELETE").cast("long")).alias("n_upserts"),
-        F.sum((F.col("op") == "DELETE").cast("long")).alias("n_deletes"),
-        F.min("lsn").alias("min_lsn"),
-        F.max("lsn").alias("max_lsn"),
-    )
-
-    def _collect_lineage() -> None:
-        try:
-            lineage_box["rows"] = lineage_q.collect()
-        except Exception as ex:  # noqa: BLE001 - re-raised on join
-            lineage_box["err"] = ex
-
-    # per-route, per-partition lineage (A4) on a BACKGROUND thread
-    # (r6): its narrow scan fills executor idle time during this
-    # route's driver-serial windows (winner collect, broadcast build,
-    # commit) instead of extending the critical path — the same
-    # overlap CdcEngine._prepare uses
-    lt = threading.Thread(target=_collect_lineage, daemon=True)
-    lt.start()
+    """Stage -> write -> commit for one route through the shared
+    epoch-write kernel (engine.stage), carrying the group membership in
+    the table's own atomic commit. Shared by the batch MultiTableEngine
+    and the streaming front-end (StreamingMultiUpsert) — the protocol is
+    identical, only the slice source differs. A route with no events
+    this epoch still commits (metadata-only): it advances its cursor and
+    group membership."""
+    meta = {
+        "group_epoch": g,
+        "group_wms": {str(p): int(v) for p, v in wms.items()},
+        **(meta_extra or {}),
+    }
+    staged = stage(route.table, routed, broadcast_threshold_rows)
     try:
-        bucket_counts = (
-            winners.groupBy(
-                bucket_expr(key, snap["n_buckets"]).alias("bucket")
-            )
-            .count()
-            .collect()
-        )
-        n_keys = sum(int(r["count"]) for r in bucket_counts)
-        affected = sorted(int(r["bucket"]) for r in bucket_counts)
-        small = n_keys <= broadcast_threshold_rows
-        meta = {
-            "group_epoch": g,
-            "group_wms": {str(p): int(v) for p, v in wms.items()},
-            **(meta_extra or {}),
-        }
-        lineage: list[dict] | None = None
-        total_events = 0
         for _attempt in range(5):
             t_epoch = (route.table.current_epoch() or 0) + 1
-            if affected:
-                delta = lww_collapse(
-                    routed,
-                    key=key,
-                    payload_cols=PAYLOAD_COLS,
-                    broadcast_winners=small,
-                    with_seq=True,
-                    winners=winners,
-                )
-                if write_mode == "mor":
-                    rewritten = append_epoch(
-                        spark, route.table, delta, t_epoch, affected=affected
-                    )
-                else:
-                    rewritten = merge_epoch(
-                        spark,
-                        route.table,
-                        delta,
-                        t_epoch,
-                        broadcast_delta=small,
-                        key_frame=winners,
-                        affected=affected,
-                    )
-            else:
-                # no events for this table this epoch: metadata-only
-                # commit still advances its cursor + group membership
-                rewritten = {}
-            if lineage is None:
-                lt.join()
-                if "err" in lineage_box:
-                    raise lineage_box["err"]
-                lineage = [
-                    {
-                        "epoch": None,  # patched below with the table epoch
-                        "source_partition": int(r["source_partition"]),
-                        "n_events": int(r["n_events"]),
-                        "n_upserts": int(r["n_upserts"] or 0),
-                        "n_deletes": int(r["n_deletes"] or 0),
-                        "sum_n_tok": 0,
-                        "min_lsn": int(r["min_lsn"]),
-                        "max_lsn": int(r["max_lsn"]),
-                        "max_ts": 0,
-                        "wall_ms": 0,
-                    }
-                    for r in lineage_box["rows"]
-                ]
-                total_events = sum(li["n_events"] for li in lineage)
-            for li in lineage:
-                li["epoch"] = t_epoch
+            rewritten, _ = staged.write(spark, t_epoch, mode=write_mode)
+            lineage = staged.lineage(t_epoch)
             if route.table.commit(
                 t_epoch,
                 rewritten,
                 wms,
                 lineage,
                 meta=meta,
-                append=(write_mode == "mor" and bool(affected)),
+                append=(write_mode == "mor" and bool(staged.affected)),
             ):
-                return t_epoch, total_events
+                return t_epoch, sum(li["n_events"] for li in lineage)
             # lost the epoch number to concurrent maintenance on
             # this table: nothing landed; recompute the number and
             # rewrite (the staged files of the lost attempt are
@@ -571,5 +477,4 @@ def apply_route(
             f"route {route.name!r}: lost the commit race 5 times"
         )
     finally:
-        winners.unpersist()
-        lt.join()
+        staged.release()

@@ -78,9 +78,9 @@ def lww_collapse(
     stored versions (late/out-of-order deltas must never overwrite a
     newer row).
 
-    `winners` may be precomputed (columns: key, `_ord`) — the engine
-    derives it from the fused grouping-sets lineage pass so the slice
-    is aggregated once per epoch, not twice."""
+    `winners` may be precomputed (columns: key, `_ord`) — the
+    epoch-write kernel passes its cached winners (engine.stage) so the
+    slice is aggregated once per epoch, not twice."""
     if payload_cols is None:
         payload_cols = tuple(c for c in df.columns if c != key)
     ord_col = _packed_order(order_cols)
@@ -124,33 +124,6 @@ def lww_collapse_maxby(
             ).alias("_last")
         )
         .select(key, "_last.*")
-    )
-
-
-def lww_collapse_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_cols: tuple[str, ...] = ORDER_COLS,
-    payload_cols: tuple[str, ...] | None = None,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Explicit two-stage salted variant: per-(key, salt) partial winner,
-    then per-key final winner. Redundant with the map-side partial
-    aggregation of `lww_collapse` (property-tested equal); kept for
-    payload reductions that are not algebraic."""
-    if payload_cols is None:
-        payload_cols = tuple(c for c in df.columns if c != key)
-    ord_col = _packed_order(order_cols)
-    stage1 = (
-        df.withColumn("_salt", F.pmod(F.col(order_cols[0]), F.lit(n_salts)))
-        .groupBy(key, "_salt")
-        .agg(F.max(ord_col).alias("_ord"))
-    )
-    winners = stage1.groupBy(key).agg(F.max("_ord").alias("_ord"))
-    return (
-        df.withColumn("_ord", ord_col)
-        .join(F.broadcast(winners), [key, "_ord"])
-        .select(key, *payload_cols)
     )
 
 
@@ -198,69 +171,9 @@ def lww_collapse_partial(
        join, and one tiny per-key aggregate (≤ k surviving rows per
        key) picks each column from its own winner row.
     """
-    if not payload_cols:
-        raise ValueError("payload_cols is required (per-column semantics)")
-    ord_col = _packed_order(order_cols)
-    ev = df.withColumn("_ord", ord_col)
-    is_ins = F.col("op") == "INSERT"
-    is_upd = F.col("op") == "UPDATE"
-
-    def writes(c: str):
-        return is_ins | (is_upd & F.array_contains(F.col(updated_col), c))
-
-    agg = ev.groupBy(key).agg(
-        F.max(F.when(F.col("op") == "DELETE", F.col("_ord"))).alias("_del"),
-        *[F.max(F.when(writes(c), F.col("_ord"))).alias(f"_w_{c}") for c in payload_cols],
+    _, packed = _column_winners(
+        df, key, order_cols, payload_cols, updated_col, broadcast_winners
     )
-    winners = agg.select(
-        key,
-        *[
-            F.when(
-                F.col(f"_w_{c}") > F.coalesce(F.col("_del"), F.lit(-(2**62))),
-                F.col(f"_w_{c}"),
-            ).alias(f"_w_{c}")
-            for c in payload_cols
-        ],
-    ).filter(
-        # row visible iff ANY column survives the latest delete
-        # (greatest() needs >= 2 args — same single-column guard as
-        # lww_collapse_partial_delta)
-        F.greatest(*[F.col(f"_w_{c}").isNotNull() for c in payload_cols])
-        if len(payload_cols) > 1
-        else F.col(f"_w_{payload_cols[0]}").isNotNull()
-    )
-    if broadcast_winners:
-        winners = F.broadcast(winners)
-    j = ev.join(winners, [key]).filter(
-        # keep only rows that ARE some column's winner (each key yields
-        # <= len(payload_cols) rows here)
-        F.greatest(*[(F.col("_ord") == F.col(f"_w_{c}")) for c in payload_cols])
-        if len(payload_cols) > 1
-        else (F.col("_ord") == F.col(f"_w_{payload_cols[0]}"))
-    )
-    # Final per-key assembly. `max(when(ord==w_c, c))` would be the
-    # obvious reduction, but max/first over ARRAY payloads is a
-    # declarative aggregate with a non-mutable buffer -> SortAggregate
-    # (sorts the winner rows, which are final-state-sized — the exact
-    # cost lww_collapse exists to avoid). collect_list is a
-    # TypedImperativeAggregate -> ObjectHashAggregate: hash-based, no
-    # sort, and bounded at <= len(payload_cols) rows per key by the
-    # winner filter above.
-    rows_struct = F.struct(F.col("_ord").alias("o"), *[F.col(c) for c in payload_cols])
-    packed = j.groupBy(key).agg(
-        F.collect_list(rows_struct).alias("_rows"),
-        *[F.max(F.col(f"_w_{c}")).alias(f"_w_{c}") for c in payload_cols],
-    )
-    def _pick(c: str):
-        # single-arg lambda (a second arg would make PySpark pass the
-        # element index); the outer-column reference resolves against
-        # `packed`
-        # try_element_at: the filtered list is EMPTY when the column
-        # has no surviving winner (ANSI element_at would throw)
-        return F.try_element_at(
-            F.filter("_rows", lambda r: r["o"] == F.col(f"_w_{c}")), F.lit(1)
-        )[c].alias(c)
-
     return packed.select(key, *[_pick(c) for c in payload_cols])
 
 
@@ -294,52 +207,9 @@ def lww_collapse_partial_delta(
     same arrival-order contract canal's adapters rely on
     [C: client-adapter/rdb/.../RdbSyncService.java :: update sets only
     columns flagged Column#updated]."""
-    if not payload_cols:
-        raise ValueError("payload_cols is required (per-column semantics)")
-    ord_col = _packed_order(order_cols)
-    ev = df.withColumn("_ord", ord_col)
-    is_ins = F.col("op") == "INSERT"
-    is_upd = F.col("op") == "UPDATE"
-
-    def writes(c: str):
-        return is_ins | (is_upd & F.array_contains(F.col(updated_col), c))
-
-    agg = ev.groupBy(key).agg(
-        F.max("_ord").alias("_seq"),
-        F.max(F.when(F.col("op") == "DELETE", F.col("_ord"))).alias("_del"),
-        *[F.max(F.when(writes(c), F.col("_ord"))).alias(f"_w_{c}") for c in payload_cols],
+    summary, packed = _column_winners(
+        df, key, order_cols, payload_cols, updated_col, broadcast_winners
     )
-    summary = agg.select(
-        key,
-        "_seq",
-        F.col("_del").isNotNull().alias("_had_del"),
-        *[
-            F.when(
-                F.col(f"_w_{c}") > F.coalesce(F.col("_del"), F.lit(-(2**62))),
-                F.col(f"_w_{c}"),
-            ).alias(f"_w_{c}")
-            for c in payload_cols
-        ],
-    )
-    winners = F.broadcast(summary) if broadcast_winners else summary
-    j = ev.join(winners, [key]).filter(
-        F.greatest(*[(F.col("_ord") == F.col(f"_w_{c}")) for c in payload_cols])
-        if len(payload_cols) > 1
-        else (F.col("_ord") == F.col(f"_w_{payload_cols[0]}"))
-    )
-    rows_struct = F.struct(F.col("_ord").alias("o"), *[F.col(c) for c in payload_cols])
-    packed = j.groupBy(key).agg(
-        F.collect_list(rows_struct).alias("_rows"),
-        F.max("_seq").alias("_seq"),
-        F.max("_had_del").alias("_had_del"),
-        *[F.max(F.col(f"_w_{c}")).alias(f"_w_{c}") for c in payload_cols],
-    )
-
-    def _pick(c: str):
-        return F.try_element_at(
-            F.filter("_rows", lambda r: r["o"] == F.col(f"_w_{c}")), F.lit(1)
-        )[c].alias(c)
-
     with_winners = packed.select(
         key,
         "_seq",
@@ -367,3 +237,92 @@ def lww_collapse_partial_delta(
         )
     )
     return with_winners.unionByName(only_del)
+
+
+def _column_winners(
+    df: DataFrame,
+    key: str,
+    order_cols: tuple[str, ...],
+    payload_cols: tuple[str, ...],
+    updated_col: str,
+    broadcast_winners: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """Per-column winner aggregate shared by lww_collapse_partial and
+    lww_collapse_partial_delta. Returns `(summary, packed)`:
+
+    - `summary`, one row per key: `_seq` (packed order of the key's
+      latest event), `_had_del` (the key has a DELETE) and, per payload
+      column c, `_w_<c>` = the order of the latest event writing c
+      after the latest DELETE (NULL if none);
+    - `packed`, one row per key with at least one surviving write: the
+      same columns plus `_rows`, the winning events (order `o` and
+      payload), from which `_pick` selects each column's value.
+
+    Plan shape: see lww_collapse_partial."""
+    if not payload_cols:
+        raise ValueError("payload_cols is required (per-column semantics)")
+    ev = df.withColumn("_ord", _packed_order(order_cols))
+    is_ins = F.col("op") == "INSERT"
+    is_upd = F.col("op") == "UPDATE"
+
+    def writes(c: str):
+        return is_ins | (is_upd & F.array_contains(F.col(updated_col), c))
+
+    agg = ev.groupBy(key).agg(
+        F.max("_ord").alias("_seq"),
+        F.max(F.when(F.col("op") == "DELETE", F.col("_ord"))).alias("_del"),
+        *[F.max(F.when(writes(c), F.col("_ord"))).alias(f"_w_{c}") for c in payload_cols],
+    )
+    summary = agg.select(
+        key,
+        "_seq",
+        F.col("_del").isNotNull().alias("_had_del"),
+        *[
+            F.when(
+                F.col(f"_w_{c}") > F.coalesce(F.col("_del"), F.lit(-(2**62))),
+                F.col(f"_w_{c}"),
+            ).alias(f"_w_{c}")
+            for c in payload_cols
+        ],
+    )
+
+    def any_of(conds):
+        # greatest() needs >= 2 args
+        return F.greatest(*conds) if len(conds) > 1 else conds[0]
+
+    # only keys with a surviving write can match a winner row below
+    winners = summary.filter(any_of([F.col(f"_w_{c}").isNotNull() for c in payload_cols]))
+    if broadcast_winners:
+        winners = F.broadcast(winners)
+    # keep only rows that ARE some column's winner (each key yields
+    # <= len(payload_cols) rows here)
+    j = ev.join(winners, [key]).filter(
+        any_of([F.col("_ord") == F.col(f"_w_{c}") for c in payload_cols])
+    )
+    # Final per-key assembly. `max(when(ord==w_c, c))` would be the
+    # obvious reduction, but max/first over ARRAY payloads is a
+    # declarative aggregate with a non-mutable buffer -> SortAggregate
+    # (sorts the winner rows, which are final-state-sized — the exact
+    # cost lww_collapse exists to avoid). collect_list is a
+    # TypedImperativeAggregate -> ObjectHashAggregate: hash-based, no
+    # sort, and bounded at <= len(payload_cols) rows per key by the
+    # winner filter above.
+    rows_struct = F.struct(F.col("_ord").alias("o"), *[F.col(c) for c in payload_cols])
+    packed = j.groupBy(key).agg(
+        F.collect_list(rows_struct).alias("_rows"),
+        F.max("_seq").alias("_seq"),
+        F.max("_had_del").alias("_had_del"),
+        *[F.max(F.col(f"_w_{c}")).alias(f"_w_{c}") for c in payload_cols],
+    )
+    return summary, packed
+
+
+def _pick(c: str):
+    """Column c's value from its own winner row in `packed._rows`."""
+    # single-arg lambda (a second arg would make PySpark pass the
+    # element index); the outer-column reference resolves against
+    # `packed`. try_element_at: the filtered list is EMPTY when the
+    # column has no surviving winner (ANSI element_at would throw)
+    return F.try_element_at(
+        F.filter("_rows", lambda r: r["o"] == F.col(f"_w_{c}")), F.lit(1)
+    )[c].alias(c)

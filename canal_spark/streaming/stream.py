@@ -1,5 +1,7 @@
-"""Structured Streaming front-end: the same epoch kernel under
-foreachBatch (T1–T4 semantics, SURVEY.md §2.9).
+"""Structured Streaming front-end: the same epoch-write kernel as the
+batch engine (engine.stage -> StagedEpoch.write -> commit; routed
+tables through multi.apply_route) under foreachBatch (T1–T4
+semantics, SURVEY.md §2.9).
 
 Canal's pipeline is push-based (parse -> sink -> ring-buffer store ->
 client ack); the streaming front-end maps it to Spark:
@@ -28,24 +30,53 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from canal_spark.engine import StagedEpoch, stage
 from canal_spark.operators import filters
-from canal_spark.operators.lww import lww_collapse
-from canal_spark.operators.merge import merge_epoch
 from canal_spark.operators.txn import committed_watermarks, tx_barrier
 from canal_spark.plans.table import SnapshotTable
 from canal_spark.sources.changelog import CHANGELOG_DDL
 
-PAYLOAD_COLS = ("op", "tokens", "n_tok", "source")
 
-
-def _offset_filter(inp: DataFrame, ckpts: dict[int, int]) -> DataFrame:
-    """Offset high-watermark: drop events at or below their partition's
-    committed checkpoint (stale redelivery across restarts). Shared by
-    the single-table and multi-table streaming front-ends."""
-    if not ckpts:
+def _past(inp: DataFrame, marks: dict[int, int]) -> DataFrame:
+    """Events past their partition's mark. Past the committed
+    checkpoints: the offset high-watermark that drops stale redelivery
+    across restarts (T5). Past an epoch's watermarks: the durable
+    pending set (incomplete transactions + DDL-clamped events). Shared
+    by the single-table and multi-table streaming front-ends."""
+    if not marks:
         return inp
-    m = F.create_map(*[F.lit(x) for kv in ckpts.items() for x in kv])
+    m = F.create_map(*[F.lit(x) for kv in marks.items() for x in kv])
     return inp.filter(F.col("lsn") > F.coalesce(m[F.col("source_partition")], F.lit(-1)))
+
+
+def _epoch_input(
+    spark: SparkSession,
+    batch_df: DataFrame | None,
+    pending: DataFrame | None,
+    ckpts: dict[int, int],
+) -> DataFrame:
+    """(micro-batch ∪ durable pending) past the committed checkpoints;
+    an empty changelog frame when there is neither."""
+    frames = [f for f in (batch_df, pending) if f is not None]
+    if not frames:
+        return spark.createDataFrame([], CHANGELOG_DDL)
+    inp = frames[0].unionByName(frames[1]) if len(frames) == 2 else frames[0]
+    return _past(inp, ckpts)
+
+
+def _write_pending(held: DataFrame, pending_dir: str) -> list[str]:
+    """Write held-back events as a durable pending store; returns its
+    files. Partitioned by source stream (not coalesce(1)): a burst of
+    incomplete transactions writes in parallel, one task per source
+    partition (AQE merges the usual near-empty tail)."""
+    held.repartition(F.col("source_partition")).write.mode("overwrite").parquet(
+        pending_dir
+    )
+    return [
+        os.path.join(pending_dir, f)
+        for f in os.listdir(pending_dir)
+        if f.endswith(".parquet")
+    ]
 
 
 def _clamp_below_ddls(inp: DataFrame, pending_ddls: list[dict]) -> DataFrame:
@@ -62,15 +93,6 @@ def _clamp_below_ddls(inp: DataFrame, pending_ddls: list[dict]) -> DataFrame:
     return inp.filter(
         F.col("lsn") <= F.coalesce(m[F.col("source_partition")], F.lit(1 << 62))
     )
-
-
-def _held_past_wms(inp: DataFrame, wms: dict[int, int]) -> DataFrame:
-    """Events past their partition's watermark — the durable pending
-    set (incomplete transactions + DDL-clamped events)."""
-    if not wms:
-        return inp
-    m = F.create_map(*[F.lit(x) for kv in wms.items() for x in kv])
-    return inp.filter(F.col("lsn") > F.coalesce(m[F.col("source_partition")], F.lit(-1)))
 
 
 class StreamingUpsert:
@@ -90,9 +112,9 @@ class StreamingUpsert:
         #: write-time CDF capture, same contract as
         #: CdcEngine(capture_changes=True): every DML epoch (numbered
         #: batches AND unnumbered DDL sub-epochs) records its net
-        #: change set; the affected-bucket list is derived from the
-        #: micro-batch delta (one tiny distinct job). DDL epochs stay
-        #: unmarked, so feeds crossing them fall back to the diff.
+        #: change set over the staged epoch's affected buckets. DDL
+        #: epochs stay unmarked, so feeds crossing them fall back to
+        #: the diff.
         self.capture_changes = capture_changes
         #: same OuterAdapter fan-out contract as CdcEngine.sinks
         self.sinks = tuple(sinks)
@@ -207,17 +229,9 @@ class StreamingUpsert:
         foreachBatch would silently drop the batch, because Spark
         checkpoints it regardless of the callback's return value."""
         ckpts = self.table.checkpoints()
-
-        pending = self.table.read_pending(self.spark)
-        if batch_df is not None:
-            inp = batch_df.unionByName(pending) if pending is not None else batch_df
-        else:
-            inp = (
-                pending
-                if pending is not None
-                else self.spark.createDataFrame([], CHANGELOG_DDL)
-            )
-        inp = _offset_filter(inp, ckpts)
+        inp = _epoch_input(
+            self.spark, batch_df, self.table.read_pending(self.spark), ckpts
+        )
         clamped = _clamp_below_ddls(inp, pending_ddls)
 
         wms = committed_watermarks(clamped, floors=ckpts)
@@ -229,127 +243,49 @@ class StreamingUpsert:
 
             complete = drop_rolled_back(complete)
         apply_df = filters.op_filter(complete)
-        held = _held_past_wms(inp, wms)
-
-        # lineage on a background thread (r6): its narrow scan runs
-        # concurrent with the pending-store write + merge jobs instead
-        # of serially before them — the same overlap CdcEngine._prepare
-        # uses; joined before the commit needs the rows
-        import threading
-
-        lineage_q = apply_df.groupBy("source_partition").agg(
-            F.count("*").alias("n_events"), F.max("lsn").alias("max_lsn")
-        )
-        box: dict = {}
-
-        def _collect_lineage() -> None:
-            try:
-                box["rows"] = lineage_q.collect()
-            except Exception as ex:  # noqa: BLE001 - re-raised on join
-                box["err"] = ex
-
-        lt = threading.Thread(target=_collect_lineage, daemon=True)
-        lt.start()
-
-        def lineage_rows():
-            lt.join()
-            if "err" in box:
-                raise box["err"]
-            return box["rows"]
-
-        delta = lww_collapse(apply_df, key="doc_id", payload_cols=PAYLOAD_COLS, with_seq=True)
+        held = _past(inp, wms)
         meta = (
             {"stream_batch_id": batch_id}
             if batch_id is not None
             else {"stream_sub_batch_id": int(sub_of)}
         )
-        for _attempt in range(5):
-            if not self._try_commit_dml(held, delta, lineage_rows, wms, meta):
+        staged = stage(self.table, apply_df)
+        try:
+            for _attempt in range(5):
+                if self._try_commit_dml(staged, held, wms, meta):
+                    return True
                 # lost the epoch number to concurrent maintenance:
                 # nothing landed (staged files are unreferenced
-                # orphans); replan on the fresh snapshot
-                continue
-            return True
+                # orphans); rewrite on the fresh snapshot
+        finally:
+            staged.release()
         raise RuntimeError("streaming epoch: lost the commit race 5 times")
 
-    def _try_commit_dml(self, held, delta, lineage_rows, wms, meta) -> bool:
-        """`lineage_rows` is a thunk: the collect runs on a background
-        thread and is joined only when the commit document needs the
-        rows — after the write jobs have been submitted."""
+    def _try_commit_dml(self, staged: StagedEpoch, held, wms, meta) -> bool:
         epoch = self.table.snapshot()["epoch"] + 1
         # NOT inside the epoch data dir — merge_epoch overwrites that dir.
-        # Partitioned by source stream (not coalesce(1)): a burst of
-        # incomplete transactions writes in parallel, one task per
-        # source partition (AQE merges the usual near-empty tail).
-        # The write runs on a background thread CONCURRENT with the
-        # merge job (r6, guide §2.6): both scan the same micro-batch
-        # input but write disjoint dirs, and each job's driver-serial
-        # windows back-fill the other's executors; the commit below
-        # joins the thread before it needs the file list.
-        import threading
+        # The pending store is written on a background thread CONCURRENT
+        # with the epoch write (r6, guide §2.6): both scan the same
+        # micro-batch input but write disjoint dirs, and each job's
+        # driver-serial windows back-fill the other's executors.
+        from concurrent.futures import ThreadPoolExecutor
 
         pending_dir = os.path.join(self.table.root, "pending", f"epoch={epoch}")
-        pend_box: dict = {}
-
-        def _write_pending() -> None:
-            try:
-                held.repartition(F.col("source_partition")).write.mode(
-                    "overwrite"
-                ).parquet(pending_dir)
-            except Exception as ex:  # noqa: BLE001 - re-raised on join
-                pend_box["err"] = ex
-
-        pt = threading.Thread(target=_write_pending, daemon=True)
-        pt.start()
-
-        def pending_files() -> list[str]:
-            pt.join()
-            if "err" in pend_box:
-                raise pend_box["err"]
-            return [
-                os.path.join(pending_dir, f)
-                for f in os.listdir(pending_dir)
-                if f.endswith(".parquet")
-            ]
-
-        if self.write_mode == "mor":
-            from canal_spark.operators.merge import append_epoch
-
-            rewritten = append_epoch(self.spark, self.table, delta, epoch)
-        else:
-            rewritten = merge_epoch(self.spark, self.table, delta, epoch)
-        # sink fan-out stays BEFORE the commit: at-least-once to sinks,
-        # exactly-once to the table (a retried commit may re-deliver
-        # the same delta under a new epoch number — the RDB sink's LWW
-        # guard makes that a no-op; the MQ sink is a redeliverable bus)
-        for sink in self.sinks:
-            sink.apply(self.spark, delta, epoch)
-        changes_rel = None
-        if self.capture_changes:
-            from canal_spark.engine import capture_epoch_changes
-
-            changes_rel = capture_epoch_changes(self.spark, self.table, delta, epoch)
-        lineage = [
-            {
-                "epoch": epoch,
-                "source_partition": int(r["source_partition"]),
-                "n_events": int(r["n_events"]),
-                "n_upserts": None,
-                "n_deletes": None,
-                "sum_n_tok": None,
-                "min_lsn": None,
-                "max_lsn": int(r["max_lsn"]),
-                "max_ts": None,
-                "wall_ms": None,
-            }
-            for r in lineage_rows()
-        ]
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            pending = pool.submit(_write_pending, held, pending_dir)
+            rewritten, changes_rel = staged.write(
+                self.spark,
+                epoch,
+                mode=self.write_mode,
+                sinks=self.sinks,
+                capture=self.capture_changes,
+            )
         return self.table.commit(
             epoch,
             rewritten,
             wms,
-            lineage,
-            pending=pending_files(),
+            staged.lineage(epoch),
+            pending=pending.result(),
             # commit() MERGES meta: a sub-epoch records only its
             # stream_sub_batch_id and keeps the prior stream_batch_id,
             # so a crash before the final numbered epoch still replays
@@ -425,15 +361,9 @@ class StreamingMultiUpsert:
         broadcast_threshold_rows: int = 4_000_000,
         ddl_events_path: str | None = None,
     ):
-        from canal_spark.multi import GroupLog
+        from canal_spark.multi import GroupLog, check_routes
 
-        names = [r.name for r in routes]
-        if len(set(names)) != len(names):
-            raise ValueError(f"duplicate route names: {names}")
-        if not routes:
-            raise ValueError("at least one TableRoute is required")
-        if write_mode not in ("cow", "mor"):
-            raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
+        check_routes(routes, write_mode)
         self.spark = spark
         self.routes = list(routes)
         self.group = GroupLog(group_dir)
@@ -575,16 +505,9 @@ class StreamingMultiUpsert:
         ckpts = self.group.checkpoints()
 
         pend = [os.path.join(self.group.root, p) for p in (marker or {}).get("pending", [])]
-        pending = self.spark.read.parquet(*pend) if pend else None
-        if batch_df is not None:
-            inp = batch_df.unionByName(pending) if pending is not None else batch_df
-        else:
-            inp = (
-                pending
-                if pending is not None
-                else self.spark.createDataFrame([], CHANGELOG_DDL)
-            )
-        inp = _offset_filter(inp, ckpts)
+        inp = _epoch_input(
+            self.spark, batch_df, self.spark.read.parquet(*pend) if pend else None, ckpts
+        )
         clamped = _clamp_below_ddls(inp, pending_ddls)
 
         recorded = recorded_group_wms(self.routes, g)
@@ -607,13 +530,11 @@ class StreamingMultiUpsert:
         # member commit so a crash at any later point finds the store
         # in place (an unreferenced store from a crashed attempt is
         # invisible — only the marker refs it)
-        held = _held_past_wms(inp, wms)
-        pending_dir = os.path.join(self.group.root, "pending", f"epoch={g}")
-        held.repartition(F.col("source_partition")).write.mode("overwrite").parquet(pending_dir)
         pending_files = [
-            os.path.join("pending", f"epoch={g}", f)
-            for f in os.listdir(pending_dir)
-            if f.endswith(".parquet")
+            os.path.relpath(p, self.group.root)
+            for p in _write_pending(
+                _past(inp, wms), os.path.join(self.group.root, "pending", f"epoch={g}")
+            )
         ]
 
         table_epochs: dict[str, int] = {}
@@ -658,25 +579,9 @@ class StreamingMultiUpsert:
                     shutil.rmtree(os.path.join(proot, d), ignore_errors=True)
         return won
 
-    def start(
-        self,
-        source_dir: str,
-        checkpoint_dir: str,
-        max_files_per_trigger: int = 1,
-    ):
-        """Tail a directory of changelog parquet files (the file-source
-        stand-in for a Kafka topic, exactly as StreamingUpsert)."""
-        stream = (
-            self.spark.readStream.schema(CHANGELOG_DDL)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(source_dir)
-        )
-        return (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+    #: tail a directory of changelog parquet files, exactly as
+    #: StreamingUpsert (the file-source stand-in for a Kafka topic)
+    start = StreamingUpsert.start
 
 
 class StreamingDeduper:

@@ -182,12 +182,13 @@ def test_streaming_capture_parity(spark, changelog_dir, oracle_state, tmp_path):
 
 def test_capture_annotations_resolve():
     """The capture entry points' `DataFrame` annotations resolve at run
-    time (typing.get_type_hints), not only as postponed strings."""
+    time (typing.get_type_hints), not only as postponed strings: the
+    capture itself and the epoch-write kernel that calls it."""
     import typing
 
     from pyspark.sql import DataFrame
 
-    from canal_spark.engine import capture_epoch_changes
+    from canal_spark.engine import capture_epoch_changes, stage
 
     assert typing.get_type_hints(capture_epoch_changes)["delta"] is DataFrame
-    assert typing.get_type_hints(CdcEngine._capture_changes)["delta"] is DataFrame
+    assert typing.get_type_hints(stage)["apply_df"] is DataFrame

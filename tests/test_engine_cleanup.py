@@ -47,3 +47,44 @@ def test_execute_failure_unpersists_all_prepared_epochs(
     from tests.oracle_replay import replay
 
     assert_state_equals_oracle(table.read(spark), replay(changelog_dir))
+
+
+def test_stream_and_route_failures_release_staged_epochs(
+    spark, changelog_dir, tmp_path, monkeypatch
+):
+    """The streaming upsert and the multi-table routes stage through the
+    same kernel (cached winners + lineage thread): a write failure in
+    either must release both, and leave the tables resumable."""
+    from canal_spark.multi import MultiTableEngine, TableRoute
+    from canal_spark.streaming.stream import StreamingUpsert
+    from tests.conftest import assert_state_equals_oracle
+    from tests.oracle_replay import replay
+
+    before = _persisted_ids(spark)
+
+    def boom(*a, **k):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(eng_mod, "merge_epoch", boom)
+    streamed = SnapshotTable.create(str(tmp_path / "s"), n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected"):
+        StreamingUpsert(spark, streamed).apply_batch(
+            spark.read.parquet(changelog_dir), 0
+        )
+    routed = SnapshotTable.create(str(tmp_path / "r"), n_buckets=4)
+    routes = [TableRoute("all", routed)]
+    grp = str(tmp_path / "grp")
+    with pytest.raises(RuntimeError, match="injected"):
+        MultiTableEngine(spark, changelog_dir, routes, grp, lsn_budget=400).run_epoch()
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"writers leaked persisted RDDs: {sorted(leaked)}"
+    assert streamed.current_epoch() == 0 and routed.current_epoch() == 0
+
+    monkeypatch.undo()
+    assert StreamingUpsert(spark, streamed).apply_batch(
+        spark.read.parquet(changelog_dir), 0
+    )
+    MultiTableEngine(spark, changelog_dir, routes, grp, lsn_budget=10**9).run_to_completion()
+    oracle = replay(changelog_dir)
+    assert_state_equals_oracle(streamed.read(spark), oracle)
+    assert_state_equals_oracle(routed.read(spark), oracle)
